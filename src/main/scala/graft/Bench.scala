@@ -108,7 +108,7 @@ object Bench {
     // base, ...), but across ~180 queries x 2 passes those temporaries
     // accumulate in the 8g bench JVM until late queries pay their GC
     // bill. After each query, unpersist every RDD that is NOT the
-    // backing storage of a DfCache-managed materialized artifact (the
+    // backing storage of a SessionCache-managed materialized artifact (the
     // warm shared inputs must stay hot — that is their point).
     def sweepTemporaries(): Unit = {
       val protectedIds = MaterializedCaches.allDfs

@@ -3,52 +3,72 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.collection.concurrent.TrieMap
 
-/** A (session, sfDir)-keyed cache of a materialized shared input (a
-  * persisted DataFrame computed once and consumed by several queries).
+/** A (session, key)-keyed cache of one kind of shared artifact — a
+  * persisted DataFrame, a trained model, a collected scalar or the path
+  * of an on-disk layout — computed once and read by several queries.
+  * Every instance registers itself with [[MaterializedCaches]], so one
+  * [[MaterializedCaches.invalidateAll]] releases every artifact in the
+  * engine.
   *
-  * Staleness caveat: entries are keyed by path, not by file content — if
-  * the parquet files under an sfDir are rewritten while a JVM holds a
-  * cached entry, consumers keep reading the persisted stale blocks until
+  * Staleness caveat, for every artifact kind: entries are keyed by path,
+  * not by file content — if the parquet files under an sfDir are
+  * rewritten while a JVM holds a cached entry, consumers keep reading
+  * the stale DataFrame blocks, models, scalars and layouts until
   * [[MaterializedCaches.invalidateAll]] (or [[clear]]) is called. Tools
   * and tests that rewrite inputs must invalidate first; long-lived
   * multi-session apps should invalidate when retiring a session so the
   * strong session references and their storage blocks are released.
   */
-final class DfCache(val name: String) {
-  private val m = TrieMap.empty[(SparkSession, String), DataFrame]
+final class SessionCache[V](val name: String) {
+  private val m = TrieMap.empty[(SparkSession, String), V]
   MaterializedCaches.register(this)
 
-  def getOrElseUpdate(key: (SparkSession, String), compute: => DataFrame): DataFrame =
+  def getOrElseUpdate(key: (SparkSession, String), compute: => V): V =
     m.getOrElseUpdate(key, compute)
 
-  private[graft] def dfs: Seq[DataFrame] = m.values.toSeq
+  /** Replace the entry: producers that deliberately re-train refresh it. */
+  def put(key: (SparkSession, String), v: V): Unit = m.put(key, v)
 
-  /** Unpersist every cached block and drop all entries (incl. the strong
-    * SparkSession references).
+  private[graft] def values: Seq[V] = m.values.toSeq
+
+  /** Unpersist the values that are DataFrames and drop every entry (incl.
+    * the strong SparkSession references). On-disk artifacts stay: their
+    * directories belong to [[TempArtifacts]] or to the caller.
     */
   def clear(): Unit = {
-    m.values.foreach(df => try df.unpersist(blocking = false) catch { case _: Exception => () })
+    m.values.foreach {
+      case df: DataFrame @unchecked =>
+        try df.unpersist(blocking = false) catch { case _: Exception => () }
+      case _ => ()
+    }
     m.clear()
   }
 }
 
-/** Registry of every [[DfCache]] in the engine, so one call releases all
-  * materialized shared inputs (see the staleness caveat on [[DfCache]]).
+/** Registry of every [[SessionCache]] in the engine, so one call releases
+  * all shared artifacts (see the staleness caveat on [[SessionCache]]).
   */
 object MaterializedCaches {
-  private val all = TrieMap.empty[String, DfCache]
+  private val all = TrieMap.empty[String, SessionCache[_]]
 
-  private[graft] def register(c: DfCache): Unit = all.put(c.name, c)
+  private[graft] def register(c: SessionCache[_]): Unit = all.put(c.name, c)
 
-  /** Unpersist and forget every cached shared input across all modules. */
+  /** Forget every cached shared artifact across all modules, unpersisting
+    * the DataFrames.
+    */
   def invalidateAll(): Unit = all.values.foreach(_.clear())
 
   private[graft] def registered: Seq[String] = all.keys.toSeq.sorted
 
-  /** Every DataFrame currently held by any [[DfCache]] — the protected
-    * set for the bench's between-queries storage janitor.
+  /** Names of the registered caches that hold at least one entry. */
+  private[graft] def holding: Seq[String] =
+    all.values.filter(_.values.nonEmpty).map(_.name).toSeq.sorted
+
+  /** Every DataFrame currently held by any [[SessionCache]] — the
+    * protected set for the bench's between-queries storage janitor.
     */
-  private[graft] def allDfs: Seq[DataFrame] = all.values.flatMap(_.dfs).toSeq
+  private[graft] def allDfs: Seq[DataFrame] =
+    all.values.flatMap(_.values.collect { case df: DataFrame @unchecked => df }).toSeq
 }
 
 /** JVM-lifetime registry of temporary on-disk artifacts (the materialized

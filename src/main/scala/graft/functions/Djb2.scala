@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.Partitioner
+import org.apache.spark.rdd.{OrderedRDDFunctions, RDD}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -186,4 +187,18 @@ class Djb2Partitioner(val partitions: Int) extends Partitioner {
     case _ => false
   }
   override def hashCode: Int = partitions
+}
+
+object Djb2Partitioner {
+  /** The reference's partition-file layout for (key, value) pairs in one
+    * shuffle: partition = djb2(key) % P (`mapreduce.c:113`) and keys in
+    * ascending unsigned UTF-8 byte order within each partition — C
+    * `strcmp` parity (`mapreduce.c:123-141`), not the JVM's UTF-16
+    * code-unit order. Physical partition i holds reference partition i.
+    */
+  def layout(kv: RDD[(String, String)], numPartitions: Int): RDD[(String, String)] = {
+    implicit val strcmpOrder: Ordering[String] = Utf8ByteOrdering
+    new OrderedRDDFunctions[String, String, (String, String)](kv)
+      .repartitionAndSortWithinPartitions(new Djb2Partitioner(numPartitions))
+  }
 }

@@ -70,7 +70,7 @@ object Dedup {
     * aggregate) that must outlive their builder call because the returned
     * DataFrame is lazy. [[sweepTemporaries]] releases them; the bench's
     * between-queries storage janitor unpersists them as a side effect of
-    * its RDD sweep (they are not DfCache-protected), so only direct
+    * its RDD sweep (they are not SessionCache-protected), so only direct
     * library consumers need to call the sweep themselves.
     */
   private val persistedTemps = new java.util.ArrayDeque[DataFrame]()

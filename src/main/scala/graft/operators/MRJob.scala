@@ -167,11 +167,12 @@ object MRJob {
     * partition (`mapreduce.c:123-141`). Output rows carry their partition
     * id, mirroring the reference's `result-<p>.txt` fan-out.
     *
-    * Uses the RDD layer deliberately: `repartitionAndSortWithinPartitions`
-    * is the one-shuffle primitive that reproduces "hash-partition + keep
-    * sorted + group adjacent equal keys" exactly — grouping is then a
-    * streaming pass over each sorted partition (no per-key state beyond
-    * one group; spill-safe at scale).
+    * Uses the RDD layer deliberately: [[Djb2Partitioner.layout]]
+    * (`repartitionAndSortWithinPartitions`) is the one-shuffle primitive
+    * that reproduces "hash-partition + keep sorted + group adjacent
+    * equal keys" exactly — grouping is then a streaming pass over each
+    * sorted partition (no per-key state beyond one group; spill-safe at
+    * scale).
     */
   def runPartitioned[OUT: Encoder: scala.reflect.ClassTag](
       spark: SparkSession,
@@ -179,13 +180,7 @@ object MRJob {
       mapper: String => IterableOnce[(String, String)],
       reducer: (Int, String, Iterator[String]) => OUT,
       numPartitions: Int): Dataset[OUT] = {
-    import org.apache.spark.rdd.RDD
-    // strcmp parity: sort on unsigned UTF-8 bytes, not the JVM's UTF-16
-    // code-unit order — the two diverge for supplementary code points.
-    implicit val strcmpOrder: Ordering[String] = graft.functions.Utf8ByteOrdering
-    val emitted: RDD[(String, String)] = input.rdd.flatMap(mapper)
-    val sorted = new org.apache.spark.rdd.OrderedRDDFunctions[String, String, (String, String)](emitted)
-      .repartitionAndSortWithinPartitions(new Djb2Partitioner(numPartitions))
+    val sorted = Djb2Partitioner.layout(input.rdd.flatMap(mapper), numPartitions)
     val out = sorted.mapPartitions { it =>
       val pid = TaskContext.getPartitionId()
       new GroupedKeyIterator(it).map { case (k, vs) => reducer(pid, k, vs) }

@@ -358,7 +358,7 @@ object Analytics {
     * stays as the declared query for SQL-surface coverage; a production
     * run at scale uses the windowed form.
     */
-  private val evChainCache = new graft.DfCache("analytics.evChain")
+  private val evChainCache = new graft.SessionCache[DataFrame]("analytics.evChain")
 
   def eventChain(s: SparkSession, d: String): DataFrame = {
     // the lag()-linked event list is persisted once per (session, sfDir):
@@ -1008,7 +1008,7 @@ object Analytics {
       .orderBy(col("col_name"))
   }
 
-  private val decileCache = new graft.DfCache("analytics.deciles")
+  private val decileCache = new graft.SessionCache[DataFrame]("analytics.deciles")
 
   /** Decile gains table (the ML-ops lift report behind every targeting
     * model): customers ranked by total order spend, cut into 10

@@ -20,7 +20,7 @@ object Graph {
     */
   private val PartOffset = 1L << 40
 
-  private val edgeCache = new graft.DfCache("graph.edges")
+  private val edgeCache = new graft.SessionCache[DataFrame]("graph.edges")
 
   /** Distinct supplier↔part edge list (both directions) — a materialized
     * graph artifact like the session table / IVF centroids / pair lists:
@@ -41,7 +41,7 @@ object Graph {
         .persist()
     })
 
-  private val degreeCache = new graft.DfCache("graph.degrees")
+  private val degreeCache = new graft.SessionCache[DataFrame]("graph.degrees")
 
   /** Out-degree table of [[edgeTable]] — the same extracted-once
     * artifact posture: ppr_topk, bfs_hops and degree_histogram all
@@ -54,7 +54,7 @@ object Graph {
     degreeCache.getOrElseUpdate((s, d),
       edgeTable(s, d).groupBy(col("src")).agg(count(lit(1)).as("dg")).persist())
 
-  private val prEdgeCache = new graft.DfCache("graph.prEdges")
+  private val prEdgeCache = new graft.SessionCache[DataFrame]("graph.prEdges")
 
   /** Degree-pre-joined, dst-partitioned edge table — the per-run setup
     * [[PageRank.run]] otherwise rebuilds (one full edge shuffle + two
@@ -70,8 +70,7 @@ object Graph {
         .repartition(col("dst")).persist()))
   }
 
-  private val hubSeeds =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (Long, Long)]
+  private val hubSeeds = new graft.SessionCache[(Long, Long)]("graph.hubSeedAndNodes")
 
   /** (hub seed, node count) — the two driver-side scalars every seeded
     * graph query needs: the deterministic max-degree/min-id seed and the
@@ -233,7 +232,7 @@ object Graph {
     * the TopKPerGroup heap at k=1 with a stated tie-break (smaller
     * neighbor id), so the result is oracle-exact.
     */
-  private val pairAggCache = new graft.DfCache("graph.pairAgg")
+  private val pairAggCache = new graft.SessionCache[DataFrame]("graph.pairAgg")
 
   /** Hub-capped ordered (u < v) supplier-pair aggregate over shared
     * parts — common-part count AND the Adamic–Adar rarity-weight sum in
@@ -372,7 +371,7 @@ object Graph {
       // top-20 replays everything again — measured 14.9 s vs ~1 s at
       // sf0.1. The round max rides the SAME job as an observed metric
       // (CollectMetrics is a row no-op) — the query is job-count-bound
-      // (round-16 GraphProfile: ~0.7 s per job on a quiet host is pure
+      // (SCALE.md, round 16: ~0.7 s per job on a quiet host is pure
       // scheduling floor), so a separate max job per half-round doubled
       // the fixed cost for a 1-row scalar.
       // r18: normalization divides by a 1-row broadcast COLUMN instead
@@ -421,10 +420,10 @@ object Graph {
     */
   private val BroadcastEdgeLimit = 20000000L
 
-  private val copurchaseCache = new graft.DfCache("graph.copurchase")
-  private val orientedCache = new graft.DfCache("graph.oriented")
-  private val copurchaseDegCache = new graft.DfCache("graph.copurchasedeg")
-  private val outAdjCache = new graft.DfCache("graph.outadj")
+  private val copurchaseCache = new graft.SessionCache[DataFrame]("graph.copurchase")
+  private val orientedCache = new graft.SessionCache[DataFrame]("graph.oriented")
+  private val copurchaseDegCache = new graft.SessionCache[DataFrame]("graph.copurchasedeg")
+  private val outAdjCache = new graft.SessionCache[DataFrame]("graph.outadj")
 
   /** Distinct part–part co-purchase edge list (u < v: parts appearing
     * together in at least one order). Materialized graph artifact like

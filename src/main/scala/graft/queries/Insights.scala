@@ -371,7 +371,7 @@ object Insights {
       .orderBy(col("dow"))
   }
 
-  private val dailyCache = new graft.DfCache("insights.daily")
+  private val dailyCache = new graft.SessionCache[DataFrame]("insights.daily")
 
   private[graft] def dailyRevenue(s: SparkSession, d: String): DataFrame =
     dailyCache.getOrElseUpdate((s, d), {

@@ -185,7 +185,7 @@ private[queries] trait PipelineAnn extends PipelineBase { this: Pipeline.type =>
     * per-query work — at 100 TB it is trained/materialized once and
     * every top-k probe reuses it.
     */
-  private[queries] val centroidCache = new graft.DfCache("pipeline.centroids")
+  private[queries] val centroidCache = new graft.SessionCache[DataFrame]("pipeline.centroids")
 
   def centroids(s: SparkSession, d: String): DataFrame =
     centroidCache.getOrElseUpdate((s, d), {
@@ -339,8 +339,7 @@ private[queries] trait PipelineAnn extends PipelineBase { this: Pipeline.type =>
     * layer parses the query vector once per request; here the fixture's
     * one query IS session state, like the hub seed.
     */
-  private[queries] val qvCache =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), Array[Long]]()
+  private[queries] val qvCache = new graft.SessionCache[Array[Long]]("pipeline.queryVec")
 
   private[queries] def queryVec(s: SparkSession, d: String): Array[Long] =
     qvCache.getOrElseUpdate((s, d),
@@ -367,14 +366,12 @@ private[queries] trait PipelineAnn extends PipelineBase { this: Pipeline.type =>
     * scalar posture: the index-sizing queries and the semantic-dedup
     * quantizer all size k from the identical count job.
     */
-  private val embCountCache =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), Long]()
+  private val embCountCache = new graft.SessionCache[Long]("pipeline.embCount")
 
   private[queries] def embCount(s: SparkSession, d: String): Long =
     embCountCache.getOrElseUpdate((s, d), Tables.embeddings(s, d).count())
 
-  private[queries] val kmeansCache =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), Array[Array[Long]]]()
+  private[queries] val kmeansCache = new graft.SessionCache[Array[Array[Long]]]("pipeline.kmeans")
 
   def kmeansModel(s: SparkSession, d: String): Array[Array[Long]] =
     kmeansCache.getOrElseUpdate((s, d),
@@ -392,7 +389,7 @@ private[queries] trait PipelineAnn extends PipelineBase { this: Pipeline.type =>
     * verify stage becomes the corpus's one quadratic pass.
     */
   private[queries] val semanticCache =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), Array[Array[Long]]]()
+    new graft.SessionCache[Array[Array[Long]]]("pipeline.semanticKmeans")
 
   def semanticModel(s: SparkSession, d: String): Array[Array[Long]] =
     semanticCache.getOrElseUpdate((s, d), {
@@ -470,8 +467,7 @@ private[queries] trait PipelineAnn extends PipelineBase { this: Pipeline.type =>
     * consumer). Depends on the coarse model: training consumes
     * [[kmeansModel]]'s cells.
     */
-  private[queries] val pqCache =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), Array[Array[Array[Long]]]]()
+  private[queries] val pqCache = new graft.SessionCache[Array[Array[Array[Long]]]]("pipeline.pq")
 
   def pqModel(s: SparkSession, d: String): Array[Array[Array[Long]]] =
     pqCache.getOrElseUpdate((s, d),
@@ -660,14 +656,12 @@ private[queries] trait PipelineAnn extends PipelineBase { this: Pipeline.type =>
     * one `cell=<cid>` directory per trained coarse cell holding only
     * (vec_id, code32) — the M byte codes bit-packed into one int, so a
     * vector's index entry is literally 4 bytes + id. Written once per
-    * JVM through
-    * [[graft.sources.Layout.writePartitioned]] (the partitionedOrders
+    * (session, dir) through [[graft.sources.Layout.writePartitioned]] (the partitionedOrders
     * convention: the ingest job writes, every consumer reads back).
     * At 100 TB this layout is why IVF probes are cheap: an unprobed
     * cell's directory is never even LISTED into the scan.
     */
-  private[queries] val pqIndexCache =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), String]()
+  private[queries] val pqIndexCache = new graft.SessionCache[String]("pipeline.pqIndexPath")
 
   def pqIndexPath(s: SparkSession, d: String): String =
     // keyed (session, dir) like pqCache/kmeansCache: a later SparkSession
@@ -960,7 +954,7 @@ private[queries] trait PipelineAnn extends PipelineBase { this: Pipeline.type =>
     * re-ran the full corpus posexplode aggregate to re-derive it.
     */
   private[queries] val sq8BoundsCache =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), Array[(Int, Long, Long)]]()
+    new graft.SessionCache[Array[(Int, Long, Long)]]("pipeline.sq8Bounds")
 
   private[queries] def sq8Bounds(s: SparkSession, d: String): Array[(Int, Long, Long)] =
     sq8BoundsCache.getOrElseUpdate((s, d),

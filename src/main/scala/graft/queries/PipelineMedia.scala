@@ -271,10 +271,10 @@ private[queries] trait PipelineMedia extends PipelineBase { this: Pipeline.type 
     * (session, dir) — the ngramPairCache posture: the declared query
     * adds only the presentation sort, and [[modalityNeardupSummary]]
     * aggregates the same bounded frame instead of re-running the
-    * decode + band join per read. DfCache-protected from the bench
+    * decode + band join per read. SessionCache-protected from the bench
     * janitor; bounded by the doc_id < 500 audit domain.
     */
-  private[queries] val imagePairCache = new graft.DfCache("media.imageNearDupPairs")
+  private[queries] val imagePairCache = new graft.SessionCache[DataFrame]("media.imageNearDupPairs")
 
   private[queries] def imageNearDupPairs(s: SparkSession, d: String): DataFrame =
     imagePairCache.getOrElseUpdate((s, d), imageNearDupPairsUncached(s, d).persist())
@@ -419,7 +419,7 @@ private[queries] trait PipelineMedia extends PipelineBase { this: Pipeline.type 
   /** The video near-dup pair artifact — the [[imageNearDupPairs]]
     * caching posture on the video column.
     */
-  private[queries] val videoPairCache = new graft.DfCache("media.videoNearDupPairs")
+  private[queries] val videoPairCache = new graft.SessionCache[DataFrame]("media.videoNearDupPairs")
 
   private[queries] def videoNearDupPairs(s: SparkSession, d: String): DataFrame =
     videoPairCache.getOrElseUpdate((s, d), videoNearDupPairsUncached(s, d).persist())
@@ -473,7 +473,7 @@ private[queries] trait PipelineMedia extends PipelineBase { this: Pipeline.type 
   /** The audio near-dup pair artifact — the [[imageNearDupPairs]]
     * caching posture on the audio column.
     */
-  private[queries] val audioPairCache = new graft.DfCache("media.audioNearDupPairs")
+  private[queries] val audioPairCache = new graft.SessionCache[DataFrame]("media.audioNearDupPairs")
 
   private[queries] def audioNearDupPairs(s: SparkSession, d: String): DataFrame =
     audioPairCache.getOrElseUpdate((s, d), audioNearDupPairsUncached(s, d).persist())

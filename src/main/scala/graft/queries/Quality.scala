@@ -93,17 +93,10 @@ object Quality {
     * with term counts normalized to integer per-mille of the doc's
     * token count — the battery's rules are RATIO tests, so the
     * learnable signal is in ratios, not raw counts (a raw-count model
-    * mostly learns document length; measured during design).
-    */
-  // takes the document frame (not just the dir) so the streaming scorer
-  // can featurize an ingest batch through the SAME definition (the
-  // audioFingerprintOfDocs convention)
-  private[graft] def qmFeaturesOfDocs(s: SparkSession,
-      dd: DataFrame): DataFrame = qmFeaturesOfCounts(tokenCounts(dd))
-
-  /** The featurizer over the shared [[tokenCounts]] grain: per-bucket
-    * term frequency recovered exactly as Σ c over the bucket's tokens
-    * (identical to counting raw occurrences — marginals-from-the-cube).
+    * mostly learns document length; measured during design). Built
+    * over the shared [[tokenCounts]] grain: per-bucket term frequency
+    * recovered exactly as Σ c over the bucket's tokens (identical to
+    * counting raw occurrences — marginals-from-the-cube).
     */
   private def qmFeaturesOfCounts(g: DataFrame): DataFrame = {
     val tf = g
@@ -212,8 +205,7 @@ object Quality {
       .select(col("doc_id"), col("y"), coalesce(col("dot"), lit(0L)).as("s"))
   }
 
-  private[queries] val qmCache =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), (Array[Long], Long)]()
+  private[queries] val qmCache = new graft.SessionCache[(Array[Long], Long)]("quality.model")
 
   private[graft] def qmModel(s: SparkSession, d: String): (Array[Long], Long) =
     qmCache.getOrElseUpdate((s, d), qmTrainModel(s, d))
@@ -747,7 +739,7 @@ object Quality {
     * without re-running the trigram chain (the ngramPairCache posture:
     * the producing query measures the build; consumers read storage).
     */
-  private val pplCache = new graft.DfCache("quality.pplScores")
+  private val pplCache = new graft.SessionCache[DataFrame]("quality.pplScores")
 
   private def perplexityScored(s: SparkSession, d: String): DataFrame =
     pplCache.getOrElseUpdate((s, d), perplexityScoredUncached(s, d).persist())
@@ -1028,20 +1020,19 @@ object Quality {
 
   // --- learned-BPE token counting ---------------------------------------
 
-  private val bpeMergeCache =
-    new scala.collection.concurrent.TrieMap[String, Array[String]]()
+  private val bpeMergeCache = new graft.SessionCache[Array[String]]("quality.bpeMerges")
 
   /** The learned BPE merge table for testdata dir `d` — trained once per
-    * JVM and reused by every consumer (the trained-artifact posture of
-    * the IVF centroids: in production the tokenizer is trained once and
-    * shipped to every job). The distributed part is the word-frequency
+    * (session, dir) and reused by every consumer (the trained-artifact
+    * posture of the IVF centroids: in production the tokenizer is
+    * trained once and shipped to every job). The distributed part is the word-frequency
     * aggregation (a groupBy/count over all alpha runs); the merge loop
     * runs driver-side over the bounded top-4096 vocabulary cut — see
     * [[graft.functions.Bpe]] for why that split is the standard one.
     * Vocabulary ties break on (count desc, word asc): deterministic.
     */
   def bpeMerges(s: SparkSession, d: String): Array[String] =
-    bpeMergeCache.getOrElseUpdate(d, {
+    bpeMergeCache.getOrElseUpdate((s, d), {
       val words = docs(s, d).select(
           explode(regexp_extract_all(col("text"), lit("[A-Za-z]+"), lit(0))).as("w"))
         .groupBy(col("w")).agg(count(lit(1)).as("c"))

@@ -189,11 +189,11 @@ object Layout {
       .write.mode("overwrite").partitionBy(partCol).parquet(path)
 
   private val partitionedOrdersCache =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), String]()
+    new graft.SessionCache[String]("layout.partitionedOrders")
 
   /** Path of the month-partitioned orders artifact for testdata dir `d`
-    * — written once per JVM via [[writePartitioned]] (12 `omonth=<m>`
-    * directories, one file each). The production posture: the
+    * — written once per (session, dir) via [[writePartitioned]] (12
+    * `omonth=<m>` directories, one file each). The production posture: the
     * partitioned fact table is written ONCE by the ingest job and every
     * consumer reads it back; [[graft.queries.Analytics.dppJoin]] is the
     * declared consumer exercising dynamic partition pruning over it.

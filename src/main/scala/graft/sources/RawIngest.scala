@@ -3,7 +3,6 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import scala.collection.concurrent.TrieMap
 
 /** Raw-ingest first mile: schema-contracted JSONL and CSV document
   * readers — the crawl-dump shape every real LLM pipeline starts from
@@ -66,18 +65,27 @@ object RawIngest {
       s"$tempRoot/$fmt-$key"
   }
 
-  private val staged = TrieMap.empty[(SparkSession, String, String), String]
+  private val staged = new graft.SessionCache[String]("rawIngest.staged")
+
+  /** Write the `fmt` staging for `sfDir` once per session and return
+    * its dir; the key folds the format in with the sfDir.
+    */
+  private def stage(s: SparkSession, sfDir: String, fmt: String)(
+      write: String => Unit): String =
+    staged.getOrElseUpdate((s, s"$fmt:$sfDir"), {
+      val dir = stageDir(fmt, sfDir)
+      write(dir)
+      dir
+    })
 
   /** Stage the documents table as raw JSONL shards (idempotent per
     * session+sfDir). The write cost belongs to the producing dump job
     * — the ingest queries measure the READ path after the first pass.
     */
   def stageJsonl(s: SparkSession, sfDir: String): String =
-    staged.getOrElseUpdate((s, sfDir, "jsonl"), {
-      val dir = stageDir("jsonl", sfDir)
+    stage(s, sfDir, "jsonl") { dir =>
       Tables.documents(s, sfDir).write.mode("overwrite").json(dir)
-      dir
-    })
+    }
 
   /** Stage the documents table as GZIP-compressed JSONL shards
     * (`part-*.json.gz`) — the shape crawl dumps actually arrive in.
@@ -94,12 +102,10 @@ object RawIngest {
     * `java.util.zip` and always available.
     */
   def stageJsonlGz(s: SparkSession, sfDir: String): String =
-    staged.getOrElseUpdate((s, sfDir, "jsonl_gz"), {
-      val dir = stageDir("jsonl_gz", sfDir)
+    stage(s, sfDir, "jsonl_gz") { dir =>
       Tables.documents(s, sfDir).write.mode("overwrite")
         .option("compression", "gzip").json(dir)
-      dir
-    })
+    }
 
   /** Recompress the gzip JSONL staging into zstd PARQUET — the
     * documented scale recommendation made runnable: one pass through
@@ -110,22 +116,18 @@ object RawIngest {
     * is paid exactly once.
     */
   def stageRecompressed(s: SparkSession, sfDir: String): String =
-    staged.getOrElseUpdate((s, sfDir, "recompressed"), {
-      val dir = stageDir("recompressed", sfDir)
+    stage(s, sfDir, "recompressed") { dir =>
       jsonl(s, stageJsonlGz(s, sfDir)).write.mode("overwrite")
         .option("compression", "zstd").parquet(dir)
-      dir
-    })
+    }
 
   /** Stage the documents table as raw headerless CSV shards. */
   def stageCsv(s: SparkSession, sfDir: String): String =
-    staged.getOrElseUpdate((s, sfDir, "csv"), {
-      val dir = stageDir("csv", sfDir)
+    stage(s, sfDir, "csv") { dir =>
       Tables.documents(s, sfDir).write.mode("overwrite")
         .option("header", "false").option("quote", "\"").option("escape", "\"")
         .csv(dir)
-      dir
-    })
+    }
 
   /** FAILFAST JSONL read under a declared schema — a corrupt line or a
     * type-incompatible field kills the job loudly (the AvroSource

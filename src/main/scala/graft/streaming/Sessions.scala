@@ -94,7 +94,7 @@ object Sessions {
     * temporal join reads, not something recomputed inside each query —
     * range_join / asof_join / asof_forward all build on this shared copy.
     */
-  private val sessionCache = new graft.DfCache("sessions.sessionTable")
+  private val sessionCache = new graft.SessionCache[DataFrame]("sessions.sessionTable")
 
   def sessionTable(spark: SparkSession, sfDir: String): DataFrame =
     sessionCache.getOrElseUpdate((spark, sfDir), sessionize(spark, sfDir).persist())

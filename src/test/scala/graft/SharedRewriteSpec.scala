@@ -88,8 +88,19 @@ class SharedRewriteSpec extends SparkSuite {
     // populate at least one cache, then invalidate: a second call must be
     // safe and the registry must know all module caches
     graft.streaming.Sessions.sessionTable(spark, sf0001).count()
-    assert(MaterializedCaches.registered.contains("sessions.sessionTable"))
+    // scalar, model and tokenizer artifacts share the same registry
+    Graph.hubSeedAndNodes(spark, sf0001)
+    Quality.bpeMerges(spark, sf0001)
+    Pipeline.embCount(spark, sf0001)
+    val populated = Seq("sessions.sessionTable", "graph.hubSeedAndNodes",
+      "quality.bpeMerges", "pipeline.embCount")
+    assert(populated.forall(MaterializedCaches.registered.contains),
+      MaterializedCaches.registered)
+    assert(populated.forall(MaterializedCaches.holding.contains),
+      MaterializedCaches.holding)
     MaterializedCaches.invalidateAll()
+    // no entry left anywhere, so no registered cache references the session
+    assert(MaterializedCaches.holding.isEmpty, MaterializedCaches.holding)
     MaterializedCaches.invalidateAll() // idempotent
     // caches repopulate on demand after invalidation
     assert(graft.streaming.Sessions.sessionTable(spark, sf0001).count() > 0)

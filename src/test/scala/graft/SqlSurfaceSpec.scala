@@ -64,6 +64,24 @@ class SqlSurfaceSpec extends SparkSuite {
     assert(e.getMessage.contains("array<bigint>"), e.getMessage)
   }
 
+  test("graft_sorted_intersect_elems generated code compiles (CODEGEN_ONLY)") {
+    // non-literal inputs over range(): constant folding and local
+    // relations would evaluate interpreted and never reach doGenCode
+    GraftFunctions.register(spark)
+    val key = "spark.sql.codegen.factoryMode"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "CODEGEN_ONLY")
+    try {
+      val r = spark.sql(
+        """SELECT graft_sorted_intersect_elems(array(id, id + 2, 7L), array(id + 2, 7L)) AS e
+          |FROM range(2) ORDER BY id""".stripMargin).collect().map(_.getSeq[Long](0))
+      assert(r.toSeq == Seq(Seq(2L, 7L), Seq(3L, 7L)))
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("graft_counteq equals the HOF tf formulation and handles edges") {
     GraftFunctions.register(spark)
     val r = spark.sql(
